@@ -30,11 +30,7 @@ import scala.util.control.NonFatal
   *
   * Cross-query isolation (within a pass): between timed queries every cache
   * entry and every persisted/checkpointed RDD is dropped (outside the timed
-  * window). The sweep first releases armed Scoped entries through the
-  * registry (CAS-guarded) and SKIPS their RDD ids, so it can no longer race
-  * the asynchronous release listener over the same blocks (the r6 "cannot
-  * be recomputed after unpersisting" / "Asked to remove block" tail
-  * warnings, VERDICT r6 #7). */
+  * window). */
 object Bench {
 
   // ---------- shared by parent fallback and child ----------
@@ -58,8 +54,8 @@ object Bench {
     spark.sparkContext.setLogLevel("WARN")
     // RDD.unpersist logs a WARN ("locally checkpointed ... cannot be
     // recomputed after unpersisting") on EVERY release of a localCheckpoint
-    // — including the deliberate single-owner releases Scoped/clearStorage
-    // perform between queries (hundreds per pass). That caution is moot
+    // — including the deliberate releases that in-loop Scoped.free calls
+    // and clearStorage perform (hundreds per pass). That caution is moot
     // under the one-consumer contract, so the bench quiets the rdd package
     // alone; the genuinely diagnostic race signature ("Asked to remove
     // block ... does not exist") comes from org.apache.spark.storage and
@@ -70,19 +66,14 @@ object Bench {
   }
 
   /** Drop all storage residue: CacheManager entries AND RDD-level blocks
-    * (localCheckpoint blocks live only at the RDD level). Armed Scoped
-    * entries are released FIRST, through the registry's CAS guard, and
-    * their RDD ids skipped — the sweep and the async release listener
-    * therefore never both unpersist the same blocks. NonFatal only: an
-    * OOM/Interrupted in the sweep must surface, not be swallowed
+    * (localCheckpoint blocks live only at the RDD level). NonFatal only:
+    * an OOM/Interrupted in the sweep must surface, not be swallowed
     * (ADVICE r6). */
   private def clearStorage(spark: SparkSession): Unit = {
-    val releasing = graft.core.Scoped.releaseAllArmed(spark)
     spark.catalog.clearCache()
     spark.sparkContext.getPersistentRDDs.values.foreach { r =>
-      if (!releasing.contains(r.id))
-        try r.unpersist(blocking = true)
-        catch { case NonFatal(_) => () } // concurrent removal: storage is gone, which is the goal
+      try r.unpersist(blocking = true)
+      catch { case NonFatal(_) => () } // concurrent ContextCleaner removal: storage is gone, which is the goal
     }
   }
 

@@ -56,6 +56,11 @@ object Verify {
     // wrappers (check.py keeps the stdout TAIL + a grep over stderr; a
     // q112 race once surfaced as a bare NO SPARK OUTPUT with no cause)
     failures.forEach { m => println(m); System.err.println(m) }
+    // storage is never cleared between queries here: whatever checkpoint
+    // blocks remain are the ones the ContextCleaner has not reclaimed yet
+    val residual = spark.sparkContext.getPersistentRDDs.values
+      .count(_.getStorageLevel != org.apache.spark.storage.StorageLevel.NONE)
+    println(s"[verify] residual storage blocks: $residual")
     println(s"[verify] done: ${futures.size - failures.size}/${futures.size} ok")
     // also persist failures: wrappers that keep only a stdout tail lose
     // the lines above when late WARNs interleave — the file survives

@@ -31,8 +31,8 @@ object ConnectedComponents {
   /** pairs(idA, idB) — undirected edges, any long id columns (first two
     * columns are used). Returns (vertex, component) for every vertex that
     * appears in a pair, component = min reachable vertex id. The result is
-    * checkpoint-backed; the caller owns its release (Scoped.free /
-    * releaseAfterUse), like PageRank.Result.graph. */
+    * checkpoint-backed, like PageRank.Result.graph: free it with
+    * Scoped.free, or let the ContextCleaner reclaim it once unreachable. */
   def assign(pairs0: DataFrame, maxRounds: Int = 50): DataFrame = {
     // take the first two columns POSITIONALLY (toDF renames by position,
     // so duplicate or dotted input names can't break resolution; a bare

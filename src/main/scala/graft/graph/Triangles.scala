@@ -4,7 +4,6 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{functions => F}
-import graft.core.Scoped
 
 /** Exact triangle counting over an undirected edge list, degree-ordered.
   *
@@ -66,8 +65,9 @@ object Triangles {
 
   /** One row: (n_vertices, n_edges, n_tri) — vertex/edge counts of the
     * cleaned undirected graph and its exact triangle count. The
-    * intermediates are checkpointed (the edge set feeds four join legs)
-    * and armed for release after the consuming action. */
+    * intermediates are checkpointed (the edge set feeds four join legs);
+    * the ContextCleaner reclaims them once the returned frame is
+    * unreachable. */
   def count(pairs0: DataFrame): DataFrame = {
     val se = normalized(pairs0).localCheckpoint()
     val deg = degrees(se)
@@ -87,7 +87,6 @@ object Triangles {
     val out = deg.agg(F.count(lit(1)).as("n_vertices"))
       .crossJoin(se.agg(F.count(lit(1)).as("n_edges")))
       .crossJoin(tri)
-    Scoped.releaseAfterUse(se, oe)
     out
   }
 }

@@ -52,11 +52,10 @@ import graft.graph.GraphBuilder.NullVertex
 object PageRank {
 
   final case class Result(graph: DataFrame, iterations: Int, avgChange: Double) {
-    /** Free the final iteration's checkpoint blocks. Call when done with
-      * `graph` (or use Scoped.releaseAfterUse(graph) to tie the release to
-      * its terminal action) — `graph.unpersist()` would NOT work: Dataset
-      * unpersist only releases CacheManager caches, never checkpoint
-      * blocks, so a long-lived session would leak one graph per run. */
+    /** Free the final iteration's checkpoint blocks now. Optional: the
+      * ContextCleaner reclaims them once `graph` is unreachable.
+      * `graph.unpersist()` would NOT work: Dataset unpersist only releases
+      * CacheManager caches, never checkpoint blocks. */
     def release(): Unit = Scoped.free(graph)
   }
 

@@ -160,8 +160,7 @@ object CorpusSearch {
     * saturates, later hop entries are the SAME DataFrame handle (values
     * equal by definition — the oracle computes every hop explicitly, so
     * parity holds). Returns the four per-hop row tables s0..s3, each
-    * localCheckpoint'ed — the CALLER owns their release (over distinct
-    * handles only) — paired with its (occupied cells, Σ 2^(27−r))
+    * localCheckpoint'ed, paired with its (occupied cells, Σ 2^(27−r))
     * digest so consumers read occupancy without re-aggregating. Shared
     * by q212 (neighborhood function) and q223 (harmonic centrality):
     * one walk, two gated surfaces. */
@@ -176,7 +175,6 @@ object CorpusSearch {
     val verts = edges.select(col("src").as("v"))
       .union(edges.select(col("dst").as("v"))).distinct()
       .localCheckpoint()
-    Scoped.releaseAfterUse(edges, verts)
     // R_0: each vertex's own 32-bit md5 hash → (register, rank)
     val init = verts
       .select(col("v"), graft.core.Portable.hash32(col("v").cast("string")).as("h"))
@@ -310,7 +308,6 @@ object CorpusSearch {
             .otherwise(floor(col("y") / col("my") * 1e9 + 0.5) / 1e9)
             .as("x"))
     }
-    Scoped.releaseAfterUse(verts, prev)
     x
   }
 
@@ -319,8 +316,7 @@ object CorpusSearch {
     * self-labels, `iters` rounds of most-frequent-neighbor-label with
     * the deterministic (count, lowest-label) tiebreak packed into one
     * max() key; per-round checkpoint, predecessor freed. Input is the
-    * directed-expanded (contact, target) row set; returns (v, label).
-    * The final state is released after its consumer's first action. */
+    * directed-expanded (contact, target) row set; returns (v, label). */
   private[graft] def lpaLabels(dedges: DataFrame, iters: Int): DataFrame = {
     var state = dedges.select(col("target").as("v")).distinct()
       .select(col("v"), col("v").as("label"))
@@ -345,7 +341,6 @@ object CorpusSearch {
       prev = step
       state = step
     }
-    Scoped.releaseAfterUse(prev)
     state
   }
 
@@ -379,7 +374,6 @@ object CorpusSearch {
       if (prev != null) Scoped.free(prev)
       prev = x
     }
-    Scoped.releaseAfterUse(verts, prev)
     x
   }
 
@@ -468,7 +462,6 @@ object CorpusSearch {
         // avgdl total is 0 either way.
         val toks = explodeLean(docs, Seq(col("doc_id")), expr(tokensExpr), "term")
           .localCheckpoint()
-        Scoped.releaseAfterUse(toks)
         val dl = toks.groupBy(col("doc_id")).agg(count(lit(1)).as("dl"))
         val tot = dl.agg(sum(col("dl")).as("tot"))
         val tf = toks.filter(col("term").isin(searchTerms: _*))
@@ -660,7 +653,6 @@ object CorpusSearch {
           .unionAll(titles.agg(count(lit(1)).as("degree")))
           .groupBy(col("degree")).agg(count(lit(1)).as("n_pages"))
           .orderBy(col("degree"))
-        Scoped.releaseAfterUse(titles)
         out
       },
       Some("""WITH docs AS (
@@ -741,7 +733,6 @@ object CorpusSearch {
                   .cast("long")).as("assort4"),
             when(col("m_edges") === 0L, lit(-1L))
               .otherwise(expr("mutual * 10000 div m_edges")).as("recip4"))
-        Scoped.releaseAfterUse(titles, edges)
         out
       },
       Some("""WITH raw AS (SELECT l_orderkey % 997 AS src,
@@ -820,9 +811,6 @@ object CorpusSearch {
           }
           pr = next
         }
-        // the final lazy plan reads g0, edges and the i=9 checkpoint —
-        // free all three as soon as the caller's terminal action completes
-        Scoped.releaseAfterUse(g0, edges, cp)
         pr.orderBy(col("title"))
       },
       Some(keyGraphFixed10Sql)),
@@ -837,7 +825,6 @@ object CorpusSearch {
         val g0 = GraphBuilder.build(keyGraphDocs(s, dir))
         val res = PageRank.runPregel(g0, minIter = 10, tol = 0.0, maxIter = 10,
           quantize = Some(1e9))
-        Scoped.releaseAfterUse(res.graph)
         res.graph.select(col("title"), col("pr")).orderBy(col("title"))
       },
       Some(keyGraphFixed10Sql)),
@@ -858,11 +845,9 @@ object CorpusSearch {
         // three times (untouched / touched / merged-df pre-filter) and the
         // production shape is a parquet TABLE, not a lazy build — without
         // materialization the gate would run the expensive build thrice.
-        // Released when the caller's terminal action completes.
         val existing = graft.index.InvertedIndex.build(
           wikiShape(base.filter(col("doc_id") % 5 =!= 0)), dfCutoff = Int.MaxValue)
           .localCheckpoint()
-        Scoped.releaseAfterUse(existing)
         val merged = graft.index.InvertedIndex.merge(
           existing, wikiShape(base.filter(col("doc_id") % 5 === 0)))
         merged.select(col("term"), col("df").cast("long").as("df"),
@@ -888,7 +873,6 @@ object CorpusSearch {
       (s: SparkSession, dir: String) => {
         val g = GraphBuilder.build(nationGraphDocs(s, dir))
         val res = PageRank.run(g)
-        Scoped.releaseAfterUse(res.graph)
         res.graph
           .select(col("title"), round(col("pr"), 6).as("pr"),
             lit(res.iterations.toLong).as("iterations"))
@@ -976,7 +960,6 @@ object CorpusSearch {
           .unionByName(settle(w4, w3, "warm_settle"))
           .unionByName(settle(c4, c3, "cold_settle"))
           .orderBy(col("kind"), col("title"))
-        Scoped.releaseAfterUse(baseQ, g2, edges, w4, w3, c4, c3)
         out
       },
       Some {
@@ -1132,7 +1115,6 @@ object CorpusSearch {
             floor(((lit(0.5) * col("p0") + lit(0.3) * col("p1"))
               + lit(0.2) * col("p2")) * 1e6 + 0.5).cast("long").as("blend6"))
           .orderBy(col("title"))
-        Scoped.releaseAfterUse(g0, edges, vt3, prev)
         out
       },
       Some("""WITH RECURSIVE docs AS (
@@ -1219,7 +1201,6 @@ object CorpusSearch {
           .select(col("v"),
             floor(col("x") * 1e6 + 0.5).cast("long").as("x6"))
           .orderBy(col("v"))
-        Scoped.releaseAfterUse(edges)
         out
       },
       Some("""WITH RECURSIVE raw AS (
@@ -1278,7 +1259,6 @@ object CorpusSearch {
           .select(col("v"),
             floor(col("x") * 1e6 + 0.5).cast("long").as("katz6"))
           .orderBy(col("v"))
-        Scoped.releaseAfterUse(edges)
         out
       },
       Some("""WITH RECURSIVE edges AS (
@@ -1351,7 +1331,6 @@ object CorpusSearch {
               .otherwise(expr("2 * e_k * 10000 div (n_k * (n_k - 1))"))
               .as("phi4"))
           .orderBy(col("k"))
-        Scoped.releaseAfterUse(und, deg)
         out
       },
       Some("""WITH raw AS (
@@ -1427,7 +1406,6 @@ object CorpusSearch {
               .otherwise(expr("2 * tri * 10000 div (deg * (deg - 1))"))
               .as("c4"))
           .orderBy(col("v"))
-        Scoped.releaseAfterUse(se)
         out
       },
       Some("""WITH re AS (
@@ -1492,7 +1470,6 @@ object CorpusSearch {
           }
           pr = next
         }
-        Scoped.releaseAfterUse(g0, edges, cp)
         pr.orderBy(col("title"))
       },
       Some("""WITH RECURSIVE docs AS (
@@ -1576,7 +1553,6 @@ object CorpusSearch {
           .select(concat(lit("v"), col("p")).as("title"),
             coalesce(col("n_1hop"), lit(0L)).as("n_1hop"), col("n_2hop"))
           .orderBy(col("title"))
-        Scoped.releaseAfterUse(titles, edges)
         out
       },
       Some("""WITH rawe AS (SELECT DISTINCT
@@ -1952,7 +1928,6 @@ object CorpusSearch {
         }
         graft.core.Scoped.free(frontier)
         graft.core.Scoped.free(edges)
-        graft.core.Scoped.releaseAfterUse(visited)
         visited.orderBy(col("level"), col("title"))
       },
       Some("""WITH RECURSIVE docs AS (
@@ -2067,7 +2042,6 @@ object CorpusSearch {
           if (prev != null) Scoped.free(prev)
           prev = contrib
         }
-        Scoped.releaseAfterUse(dedges, prev)
         state.select(concat(lit("v"), col("v")).as("title"),
           col("h9").as("hub9"), col("a9").as("auth9"))
           .orderBy(col("title"))
@@ -2134,7 +2108,6 @@ object CorpusSearch {
           .localCheckpoint()
         val state = lpaLabels(dedges, 5)
         val sizes = state.groupBy(col("label")).agg(count(lit(1)).as("comm_size"))
-        Scoped.releaseAfterUse(dedges)
         state.join(broadcast(sizes), Seq("label"))
           .select(concat(lit("v"), col("v")).as("title"),
             col("label").as("community"), col("comm_size"))
@@ -2209,7 +2182,6 @@ object CorpusSearch {
           .localCheckpoint()
         val labels = lpaLabels(dedges, 5)
         val m2 = dedges.count() // M = 2m, a 1-value driver pull (I3)
-        Scoped.releaseAfterUse(dedges)
         val le = dedges
           .join(broadcast(labels.select(col("v").as("contact"),
             col("label").as("lc"))), Seq("contact"))
@@ -2530,10 +2502,6 @@ object CorpusSearch {
           .localCheckpoint()
         val counts = parsed.groupBy(col("fidx")).agg(count(lit(1)).as("c"))
           .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-        // armed only AFTER the counts pull — that pull is itself a
-        // completed action and would fire the release under the main
-        // query (the q191 lesson)
-        Scoped.releaseAfterUse(parsed)
         val bases = parts.indices
           .scanLeft(0L)((acc, i) => acc + counts.getOrElse(i.toLong, 0L))
         val baseDf = parts.indices.map(i => (i.toLong, bases(i)))
@@ -2679,7 +2647,6 @@ object CorpusSearch {
               + lit(3L) * (col("e2") - col("e1"))
               + lit(2L) * (col("e3") - col("e2"))).as("hc6"))
           .orderBy(desc("hc6"), asc("v")).limit(20)
-        hops.distinct.foreach(Scoped.releaseAfterUse(_))
         out
       },
       Some(s"""WITH $hyperballCtes,
@@ -3033,7 +3000,6 @@ object CorpusSearch {
           .agg(sum(expr(
             "(psig * (1000000 + coalesce(wdelta, 0L))) div wsig"))
             .as("delta"))
-        Scoped.releaseAfterUse(dag, d3, d2)
         d1.unionByName(d2).unionByName(d3)
           .groupBy(col("v")).agg(sum(col("delta")).as("bc6"))
           .filter(col("bc6") > 0L)
@@ -3161,7 +3127,6 @@ object CorpusSearch {
     val n = docs.count() // driver-side metadata agg, like ref A2
     val toks = explodeLean(docs, Seq(col("doc_id")), expr(tokensExpr), "term")
       .localCheckpoint()
-    Scoped.releaseAfterUse(toks)
     val dl = toks.groupBy(col("doc_id")).agg(count(lit(1)).as("dl"))
     val tot = dl.agg(sum(col("dl")).as("tot"))
     val qtoks = toks.join(broadcast(queries), col("term") === col("query_id"))
@@ -3249,7 +3214,6 @@ object CorpusSearch {
     val n = docs.count() // driver-side metadata agg, like ref A2
     val toks = explodeLean(docs, Seq(col("doc_id")), expr(tokensExpr), "term")
       .localCheckpoint()
-    Scoped.releaseAfterUse(toks)
     val dl = toks.groupBy(col("doc_id")).agg(count(lit(1)).as("dl"))
     val tot = dl.agg(sum(col("dl")).as("tot"))
     val qtoks = toks.join(broadcast(qtab.select(col("query_id"), col("term"))), Seq("term"))

@@ -206,7 +206,6 @@ object DedupSim {
       // both consumers (canonical agg + mark-back join) read the
       // gram table: checkpoint so tokenize+fingerprint runs once
       .localCheckpoint()
-    Scoped.releaseAfterUse(grams)
     val canon = grams.groupBy(col("g"))
       .agg(min(struct(col("doc_id"), col("i"))).as("c"),
         count(lit(1)).as("nocc"))
@@ -421,9 +420,8 @@ object DedupSim {
     * bucketing (pigeonhole: hamming ≤ 3 ⇒ ≥ 1 exact block match) —
     * shared by q34/q126 (pair list) and q49 (cluster assignment).
     * Materializes the signature table once (the block self-join would
-    * otherwise run the full tokenize+sum aggregation on both sides) and
-    * arms its release on the consumer's terminal action; a multi-action
-    * consumer (q49) frees the checkpoint explicitly instead.
+    * otherwise run the full tokenize+sum aggregation on both sides); a
+    * multi-action consumer (q49) frees the checkpoint explicitly.
     *
     * The blocking space must GROW with the corpus (VERDICT r11 #2 — the
     * measured 1.53× sf0.1→sf1 slope at 32 bits is the n²/1024 candidate
@@ -451,7 +449,6 @@ object DedupSim {
 
   private[graft] def simhashCandFrom(docs: DataFrame, bits: Int): DataFrame = {
     val sig = simhashSigFrom(docs, bits).localCheckpoint()
-    Scoped.releaseAfterUse(sig)
     val bval =
       if (bits == 32) expr("(simhash div cast(pow(2, blk * 8) as bigint)) % 256")
       else expr(s"shiftright(simhash, blk * ${bits / 4}) & ${(1L << (bits / 4)) - 1}")
@@ -612,7 +609,6 @@ object DedupSim {
         cand.filter(expr("bit_count(ha ^ hb)") <= 3)
           .select(col("id_a"), col("id_b")))
       Scoped.free(cand)
-      Scoped.releaseAfterUse(l)
       l
     }
     t(s, dir, "documents")
@@ -792,7 +788,6 @@ object DedupSim {
     * oracle needs no sampling twin. */
   def lshRecall(s: SparkSession, dir: String, sampleFraction: Double = 1.0): DataFrame = {
     val shAll = shingles(s, dir).localCheckpoint()
-    Scoped.releaseAfterUse(shAll)
     val exact = exactJaccardPairs(sampleDocs(shAll, "lshs:", sampleFraction))
     val bands = minhashBands(shAll)
     val cand = bands.select(col("doc_id").as("id_a"), col("band"), col("sig"))
@@ -836,14 +831,12 @@ object DedupSim {
     // list and stays exact
     require(hamMax >= 0 && hamMax <= 3, s"hamMax must be in [0, 3], got $hamMax")
     val sh = shingles(s, dir).localCheckpoint()
-    Scoped.releaseAfterUse(sh)
     val exact = exactJaccardPairs(sampleDocs(sh, "shq:", sampleFraction))
     val cand = simhashCand(s, dir, ScaleBits)
     val pred = cand.filter(expr("bit_count(ha ^ hb)") <= hamMax)
       .select(col("id_a"), col("id_b"))
       .localCheckpoint() // consumed twice below (semi join + counts)
     Scoped.free(cand) // releases the sig checkpoint behind the plan
-    Scoped.releaseAfterUse(pred)
     val hit = exact.join(pred, Seq("id_a", "id_b"), "left_semi")
     val counts = exact.agg(count(lit(1)).as("n_exact"))
       .crossJoin(pred.agg(count(lit(1)).as("n_pred")))
@@ -911,8 +904,7 @@ object DedupSim {
     * filters over it. The exact jaccard side (the one quadratic shape)
     * runs once, `sampleFraction`-bounded at corpus scale
     * ([[sampleDocs]]), and is shared by all four pair-sketch rows. All
-    * rows fuse into one action, so every armed checkpoint releases on
-    * the single gate action. At 1.0 the 4×4 and ham≤3 rows equal
+    * rows fuse into one gate action. At 1.0 the 4×4 and ham≤3 rows equal
     * q114/q122's gate numbers (ApproxSpec pins this). Adding a config is
     * one more row — the round-9 sweep extension point. */
   def sketchEval(s: SparkSession, dir: String, sampleFraction: Double = 1.0): DataFrame = {
@@ -921,14 +913,12 @@ object DedupSim {
       .localCheckpoint()
     val mh = minhashTable(sh).localCheckpoint()
     Scoped.free(sh) // both consumers materialized — release the shingles now
-    Scoped.releaseAfterUse(exact, mh)
     val candAll = simhashCand(s, dir, ScaleBits)
     val predAll = candAll
       .select(col("id_a"), col("id_b"), expr("bit_count(ha ^ hb)").as("ham"))
       .filter(col("ham") <= 3)
       .localCheckpoint()
     Scoped.free(candAll) // releases the sig checkpoint behind the plan
-    Scoped.releaseAfterUse(predAll)
     def row(name: String, cand: DataFrame): DataFrame = {
       val hit = exact.join(cand, Seq("id_a", "id_b"), "left_semi")
       exact.agg(count(lit(1)).as("n_exact"))
@@ -964,7 +954,6 @@ object DedupSim {
     val exactTop = top10(e.filter(col("vec_id") =!= 0)).localCheckpoint()
     val idx = Ivf.buildIndex(e.filter(col("vec_id") =!= 0),
       "embedding", Ivf.DefaultBits, Ivf.DefaultDims).localCheckpoint()
-    Scoped.releaseAfterUse(exactTop, idx)
     def srpRow(name: String, nprobe: Int): DataFrame = {
       val cells = Ivf.probeCellsForQuery(qvec, Ivf.DefaultBits, nprobe)
       val annTop = top10(idx.filter(col("cell").isin(cells: _*)))
@@ -1192,14 +1181,11 @@ object DedupSim {
       (s: SparkSession, dir: String) => {
         // The shingle set feeds three consumers (self-join ×2 + sizes) —
         // materialize it once instead of re-running regex+explode+distinct
-        // per consumer, and release the blocks as soon as the query's
-        // terminal action completes (a long-lived session must not
-        // accumulate one shingle table per dedup run). (At 100 TB this is
+        // per consumer. (At 100 TB this is
         // persist-to-disk of the shingle table, the standard shape for
         // multi-pass dedup.) Shingles ride the 60-bit fingerprint
         // ([[shingleHashes]], r17) — equality-only consumer.
         val sh = shingleHashes(s, dir).localCheckpoint()
-        Scoped.releaseAfterUse(sh)
         val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
         val pairs = sh.select(col("doc_id").as("id_a"), col("shingle"))
           .join(sh.select(col("doc_id").as("id_b"), col("shingle")), Seq("shingle"))
@@ -1229,9 +1215,8 @@ object DedupSim {
     ("q32_minhash_lsh",
       (s: SparkSession, dir: String) => {
         // Four consumers (minhash input, sizes, verify join ×2) — same
-        // materialize-once + release-after-use rationale as q31.
+        // materialize-once rationale as q31.
         val sh = shingles(s, dir).localCheckpoint()
-        Scoped.releaseAfterUse(sh)
         val bands = minhashBands(sh)
         val cand = bands.select(col("doc_id").as("id_a"), col("band"), col("sig"))
           .join(bands.select(col("doc_id").as("id_b"), col("band"), col("sig")), Seq("band", "sig"))
@@ -1371,11 +1356,8 @@ object DedupSim {
           cand.filter(expr("bit_count(ha ^ hb)") <= 3)
             .select(col("id_a"), col("id_b")))
         // assign's first step materialized the pair list, so the signature
-        // checkpoint behind cand is consumed — free it now (its armed
-        // listener never fires on materialize-only actions and is reaped
-        // by Scoped's sweep)
+        // checkpoint behind cand is consumed — free it now
         Scoped.free(cand)
-        Scoped.releaseAfterUse(labels)
         labels.select(col("v").as("doc_id"), col("comp").as("cluster_id"))
           .orderBy(col("doc_id"))
       },
@@ -1677,7 +1659,6 @@ object DedupSim {
               reverse(col("text")).as("text")))
         val shC = shingleDf(docs).localCheckpoint()
         val shD = shingleDf(delta).localCheckpoint()
-        Scoped.releaseAfterUse(shC, shD)
         // the delta side is the SMALL side by definition — broadcast its
         // band signatures so the corpus index is probed map-side, and
         // broadcast the candidate list into the verification joins
@@ -1762,7 +1743,6 @@ object DedupSim {
           cand.filter(expr("bit_count(ha ^ hb)") <= 3)
             .select(col("id_a"), col("id_b")))
         Scoped.free(cand)
-        Scoped.releaseAfterUse(labels)
         val w = org.apache.spark.sql.expressions.Window.partitionBy(col("cluster_id"))
         labels.select(col("v").as("doc_id"), col("comp").as("cluster_id"))
           .join(t(s, dir, "documents").select(col("doc_id"), col("n_chars")), Seq("doc_id"))
@@ -1920,7 +1900,7 @@ object DedupSim {
         // SYNCHRONOUSLY once fit returns, and build the gate plan fresh
         // from the parquet scan: one extra scan (cheap vs the rounds;
         // at 100 TB the persisted table would simply outlive the query)
-        // in exchange for zero deferred-release machinery in flight
+        // in exchange for no checkpoint held during the gate action
         val eqCp = eqOf().localCheckpoint()
         val cents = KMeans.fit(eqCp, k = kmeansK, iters = kmeansIters)
         Scoped.free(eqCp)
@@ -2030,7 +2010,6 @@ object DedupSim {
           .select(col("doc_id"), explode_outer(col("hs")).as("h"))
           .filter(col("h").isNotNull)
           .localCheckpoint()
-        Scoped.releaseAfterUse(ch)
         val keep = ch.join(
           ch.groupBy(col("h")).agg(count(lit(1)).as("nf"))
             .filter(col("nf") <= 20).select(col("h")), Seq("h"))
@@ -2095,8 +2074,8 @@ object DedupSim {
                 expr("slice(embedding, 2, size(embedding) - 1)")).as("embedding")))
         }
         // q103's discipline: checkpoint only for fit, free synchronously,
-        // rebuild the (cheap) derivation for the gate plan — no deferred
-        // release in flight during the gate action
+        // rebuild the (cheap) derivation for the gate plan — no
+        // checkpoint held during the gate action
         val eqCp = augOf()
           .select(col("vec_id"), KMeans.quantCol(col("embedding")).as("eq"))
           .localCheckpoint()
@@ -2273,7 +2252,6 @@ object DedupSim {
           t(s, dir, "embeddings").filter(col("vec_id") =!= 0), "embedding", nbits, dims)
           .select(col("vec_id"), col("label"), col("cell"), col("embedding"))
           .localCheckpoint() // feeds both sides of the blocked pair join
-        Scoped.releaseAfterUse(idx)
         val a = idx.filter(col("label") === 0)
           .select(col("vec_id").as("id_a"), col("cell"), col("embedding").as("ea"))
         val b = idx.filter(col("label") === 1)
@@ -2294,7 +2272,6 @@ object DedupSim {
           .select(col("id_a"), col("id_b"),
             floor(expr(cosSpark("ea", "eb")) * 1e4 + 0.5).cast("long").as("s"))
           .localCheckpoint() // feeds both k-NN normalizers and the margin join
-        Scoped.releaseAfterUse(pairs)
         def knnAvg(key: String, other: String, out: String) = {
           val w = Window.partitionBy(col(key)).orderBy(desc("s"), asc(other))
           pairs.withColumn("rk", row_number().over(w)).filter(col("rk") <= 4)
@@ -2866,10 +2843,6 @@ object DedupSim {
           .map(r => r.getLong(0) -> r.getLong(1)).toMap
         val pmap = pairs.collect()
           .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
-        // the bounded collects above are actions too — arm the pool's
-        // release only NOW, so it fires on the consumer's terminal action
-        // (the gate write through the final join), not on the first collect
-        Scoped.releaseAfterUse(pool)
         var picked = Vector.empty[(Long, Long)] // (vec_id, score4)
         (1 to 5).foreach { _ =>
           val chosen = picked.map(_._1).toSet
@@ -3334,7 +3307,6 @@ object DedupSim {
     ("q171_source_dup_flow",
       (s: SparkSession, dir: String) => {
         val sh = shingles(s, dir).localCheckpoint()
-        Scoped.releaseAfterUse(sh)
         val bands = minhashBands(sh)
         val cand = bands.select(col("doc_id").as("id_a"), col("band"), col("sig"))
           .join(bands.select(col("doc_id").as("id_b"), col("band"), col("sig")),
@@ -3471,7 +3443,6 @@ object DedupSim {
           .select(col("doc_id"),
             expr("array_distinct(gram_hash60(ws, 5))").as("arr"))
           .localCheckpoint()
-        Scoped.releaseAfterUse(docsh)
         val flat = docsh.select(col("doc_id"), explode(col("arr")).as("shingle"))
         val rare = flat.join(
           flat.groupBy(col("shingle")).agg(count(lit(1)).as("df"))
@@ -3584,7 +3555,6 @@ object DedupSim {
             floor(round(expr(cosSpark("ea", "eb")), 4) * 10000 + 0.5)
               .cast("long").as("sim4i"))
           .localCheckpoint()
-        Scoped.releaseAfterUse(pairs)
         val wNeg = org.apache.spark.sql.expressions.Window
           .partitionBy(col("anchor_id")).orderBy(desc("sim4i"), asc("cand_id"))
         val negs = pairs.filter(col("lb") =!= col("la"))
@@ -3676,7 +3646,6 @@ object DedupSim {
           // fused gram kernel, bound once as a lambda value (q111 lesson)
           .select(col("doc_id"), expr(winnowFpsExpr).as("fps"))
           .localCheckpoint()
-        Scoped.releaseAfterUse(fps)
         val flat = fps.select(col("doc_id"), explode(col("fps")).as("fp"))
         val rare = flat.join(
           flat.groupBy(col("fp")).agg(count(lit(1)).as("df"))
@@ -3770,7 +3739,6 @@ object DedupSim {
     ("q185_dedup_threshold_curve",
       (s: SparkSession, dir: String) => {
         val sh = shingles(s, dir).localCheckpoint()
-        Scoped.releaseAfterUse(sh)
         val bands = minhashBands(sh)
         val cand = bands.select(col("doc_id").as("id_a"), col("band"), col("sig"))
           .join(bands.select(col("doc_id").as("id_b"), col("band"), col("sig")),
@@ -3789,7 +3757,6 @@ object DedupSim {
           .select(col("id_a"), col("id_b"),
             expr("common * 10000 div (na + nb - common)").as("jac4"))
           .localCheckpoint()
-        Scoped.releaseAfterUse(pairs)
         // bigint thresholds: DuckDB's range() yields BIGINT and the
         // compare sorts on schema-hashed columns
         val ts = s.range(1).select(
@@ -3882,7 +3849,6 @@ object DedupSim {
               .when(col("bucket") === 8L, "val").otherwise("test"))
           .localCheckpoint()
         Scoped.free(labels)
-        Scoped.releaseAfterUse(grouped)
         val leaks = grouped.groupBy(col("grp"))
           .agg(countDistinct(col("split")).as("ns"))
           .filter(col("ns") > 1)
@@ -4222,7 +4188,6 @@ object DedupSim {
         // the seeds checkpoint just consumed grams' two readers (the
         // nocc agg + the mark-back join) — free it now, q49's pattern
         Scoped.free(grams)
-        Scoped.releaseAfterUse(seeds)
         val pairs = seeds.select(col("doc_id").as("da"), col("i").as("ia"), col("g"))
           .join(seeds.select(col("doc_id").as("db"), col("i").as("ib"), col("g")),
             Seq("g"))
@@ -4332,7 +4297,6 @@ object DedupSim {
     ("q252_source_containment",
       (s: SparkSession, dir: String) => {
         val ssh = q252SourceShingles(s, dir).localCheckpoint()
-        Scoped.releaseAfterUse(ssh)
         val na = ssh.groupBy(col("source")).agg(count(lit(1)).as("n_sh"))
         val inter = ssh.as("a")
           .join(ssh.as("b"),
@@ -4427,7 +4391,6 @@ object DedupSim {
         col("r.v").as("v"))
     val out = comp.unionByName(summary).unionByName(delta)
       .orderBy(col("kind"), col("i"))
-    Scoped.releaseAfterUse(full, prev, v)
     out
   }
 
@@ -4522,7 +4485,6 @@ object DedupSim {
       .select(col("r.kind").as("kind"), col("r.i").as("i"),
         col("r.v").as("v"))
     val out = comp2.unionByName(summary).orderBy(col("kind"), col("i"))
-    Scoped.releaseAfterUse(full1, full2, v1, v2, prev1, prev2)
     out
   }
 

@@ -70,7 +70,6 @@ object Events {
     // (cum both sides + total)
     val hist = binned.groupBy(col("bin")).agg(count(lit(1)).as("n"))
       .localCheckpoint()
-    Scoped.releaseAfterUse(hist)
     val cum = hist.as("a")
       .join(hist.as("b"), col("b.bin") <= col("a.bin"))
       .groupBy(col("a.bin").as("bin"))
@@ -993,7 +992,6 @@ object Events {
         val binned = binnedEvents(ev(s, dir), "event_type")
         val hist = binned.groupBy(col("event_type"), col("bin"))
           .agg(count(lit(1)).as("n")).localCheckpoint()
-        Scoped.releaseAfterUse(hist)
         val bins = hist.select(col("bin")).distinct()
         val tot = hist.groupBy(col("event_type"))
           .agg(sum(col("n")).as("tot"))
@@ -1088,14 +1086,12 @@ object Events {
           .select(col("event_type"), expr("(us div 3600000000) % 24").as("h"))
           .groupBy(col("event_type"), col("h")).agg(count(lit(1)).as("o"))
           .localCheckpoint()
-        Scoped.releaseAfterUse(oh)
         val hours = s.range(24).select(col("id").as("h"))
         val grid = oh.select(col("event_type")).distinct().crossJoin(hours)
           .join(oh, Seq("event_type", "h"), "left_outer")
           .select(col("event_type"), col("h"),
             coalesce(col("o"), lit(0L)).as("o"))
           .localCheckpoint()
-        Scoped.releaseAfterUse(grid)
         val agg1 = grid.groupBy(col("event_type"))
           .agg(sum(col("o")).as("n"),
             max(struct(col("o"), (-col("h")).as("nh"))).as("pk"))
@@ -1165,7 +1161,6 @@ object Events {
           .select(col("event_type"), expr("us div 86400000000").as("d"))
           .groupBy(col("event_type"), col("d")).agg(count(lit(1)).as("y"))
           .localCheckpoint()
-        Scoped.releaseAfterUse(daily)
         val pairs = daily.as("a")
           .join(daily.as("b"),
             col("a.event_type") === col("b.event_type")
@@ -1279,7 +1274,6 @@ object Events {
           .agg(count(lit(1)).as("m"),
             sum(when(col("failed"), 1L).otherwise(0L)).as("d"))
           .localCheckpoint()
-        Scoped.releaseAfterUse(byT)
         // risk set at t: everyone whose duration (failure OR censor) >= t
         val risk = byT.as("a")
           .join(byT.as("b"), col("b.t") >= col("a.t"))
@@ -1292,7 +1286,6 @@ object Events {
               - log(col("n_risk").cast("double"))) * 1e6 + 0.5).cast("long"))
             .as("l6"))
           .localCheckpoint()
-        Scoped.releaseAfterUse(terms)
         terms.as("x")
           .join(terms.select(col("t").as("t2"), col("l6").as("l62")).as("y"),
             col("t2") <= col("x.t"))
@@ -1364,7 +1357,6 @@ object Events {
           .groupBy(col("event_type").as("a"), col("next_type").as("b"))
           .agg(count(lit(1)).as("c_ab"))
           .localCheckpoint()
-        Scoped.releaseAfterUse(tr)
         val ca = tr.groupBy(col("a"))
           .agg(sum(col("c_ab")).as("c_a"), count(lit(1)).as("fanout"))
         val terms = tr.join(broadcast(ca), Seq("a"))
@@ -1375,7 +1367,6 @@ object Events {
           .groupBy(col("a"), col("c_a"), col("fanout"))
           .agg(sum(col("term")).as("tsum"))
           .localCheckpoint()
-        Scoped.releaseAfterUse(terms)
         val perState = terms.select(lit(0L).as("is_total"), col("a"),
           col("c_a").as("n_trans"), col("fanout"),
           floor((-col("tsum")).cast("double") / col("c_a").cast("double")
@@ -1444,7 +1435,6 @@ object Events {
           .select(col("event_type"), expr("us div 86400000000").as("d"))
           .groupBy(col("event_type"), col("d"))
           .agg(count(lit(1)).as("y")).localCheckpoint()
-        Scoped.releaseAfterUse(daily)
         val mk = daily.as("a")
           .join(daily.as("b"),
             col("a.event_type") === col("b.event_type")
@@ -1540,7 +1530,6 @@ object Events {
           .withColumn("rk", row_number().over(w))
           .filter(col("rk") <= k + 1)
           .localCheckpoint()
-        Scoped.releaseAfterUse(top)
         val thr = top.filter(col("rk") === k + 1)
           .select(col("event_type"), col("xc").as("xk1"))
         top.filter(col("rk") <= k)
@@ -1655,7 +1644,6 @@ object Events {
         }
         Scoped.free(tr)
         Scoped.free(ca)
-        Scoped.releaseAfterUse(v)
         v.select(col("a"), col("v6").as("exp_steps6"))
           .orderBy(col("a"))
       },
@@ -1839,7 +1827,6 @@ object Events {
         val au = ev(s, dir)
           .select(col("event_type"), col("user_id")).distinct()
           .localCheckpoint()
-        Scoped.releaseAfterUse(au)
         val na = au.groupBy(col("event_type")).agg(count(lit(1)).as("na"))
         val inter = au.as("a")
           .join(au.as("b"),
@@ -1901,7 +1888,6 @@ object Events {
           .select(col("event_type"), expr("us div 86400000000").as("d"))
           .groupBy(col("event_type"), col("d"))
           .agg(count(lit(1)).as("y")).localCheckpoint()
-        Scoped.releaseAfterUse(daily)
         val lags = s.range(1, 4).select(col("id").as("lag"))
         val pairs = lags.crossJoin(daily.as("a"))
           .join(daily.as("b"),
@@ -2013,7 +1999,6 @@ object Events {
             concat_ws(">", col("event_type"), col("t2"), col("t3"))
               .as("gram"))
           .distinct().localCheckpoint()
-        Scoped.releaseAfterUse(dg)
         val novel = dg.as("a")
           .join(dg.as("b"),
             col("a.gram") === col("b.gram") && col("b.d") < col("a.d"),

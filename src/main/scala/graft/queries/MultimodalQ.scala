@@ -182,7 +182,6 @@ object MultimodalQ {
       (s: SparkSession, dir: String) => {
         val media = graft.multimodal.MediaFixtures.ahashPng(s, dir)
         val ah = Multimodal.imageAHash(s, media).toDF().localCheckpoint()
-        graft.core.Scoped.releaseAfterUse(ah)
         // decode failures hash to (0,0,0,0); without this filter they would
         // all pair with each other at distance 0 (and with any zero block)
         // on real data, flooding the near-dup output (ADVICE r6). The

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.core.Portable._
-import graft.core.{Scoped, Tables}
+import graft.core.Tables
 
 /** Relational operator coverage (SURVEY.md §2.2–§2.8): scans, filters,
   * projections, every join shape, aggregation, window functions, set ops,
@@ -194,7 +194,6 @@ object Relational {
       .withColumn("w", expr(widthCase))
       .withColumn("bin", floor(col("v").cast("double") / col("w")))
       .localCheckpoint()
-    Scoped.releaseAfterUse(m)
     m
   }
 
@@ -1555,7 +1554,6 @@ object Relational {
         val hist = stacked.groupBy(col("cid"), col("v"))
           .agg(count(lit(1)).as("c"))
           .localCheckpoint() // feeds the quartile AND the fence pass
-        Scoped.releaseAfterUse(hist)
         val totals = hist.groupBy(col("cid")).agg(sum(col("c")).as("n_rows"))
         val cum = hist
           .withColumn("cum", sum(col("c")).over(
@@ -1829,7 +1827,6 @@ object Relational {
             (col("l_suppkey") % 16).as("y"))
           .withColumn("z", ZOrder.zvalue16(col("x"), col("y")))
           .localCheckpoint()
-        Scoped.releaseAfterUse(d)
         val matched = d.filter(col("x").between(32, 63) &&
           col("y").between(4, 7)).agg(count(lit(1)).as("rows_matched"))
         def layout(name: String, bucket: org.apache.spark.sql.Column) =
@@ -1911,11 +1908,9 @@ object Relational {
           .select(expr(stackE)).filter(col("v").isNotNull)
         val base = t(s, dir, "lineitem")
         val bv = vals(base).localCheckpoint() // feeds min/max, counts, totals
-        Scoped.releaseAfterUse(bv)
         val cv = vals(driftCandidate(base))
         val mm = bv.groupBy(col("cn")).agg(min(col("v")).as("mn"), max(col("v")).as("mx"))
           .localCheckpoint() // 4 rows; joined three times below
-        Scoped.releaseAfterUse(mm)
         val bb = bv.join(broadcast(mm), Seq("cn"))
           .withColumn("bin", expr("(v - mn) * 10 div (mx - mn + 1)"))
           .groupBy(col("cn"), col("bin")).agg(count(lit(1)).as("cb"))
@@ -2018,7 +2013,6 @@ object Relational {
             parent: DataFrame, pk: String): DataFrame = {
           val keys = child.select(col(ck).as("k")).filter(col("k").isNotNull)
             .distinct().localCheckpoint()
-          Scoped.releaseAfterUse(keys)
           val pkeys = parent.select(col(pk).as("k")).distinct()
           val orphans = keys.join(pkeys, Seq("k"), "left_anti")
             .agg(count(lit(1)).as("n_orphan_keys"))
@@ -2527,7 +2521,6 @@ object Relational {
             (floor(col("c_acctbal") / 1000.0).cast("long") * 1000L).as("v"))
         val ngv = rows.groupBy(col("nation"), col("segment"), col("v"))
           .agg(count(lit(1)).as("n_gv")).localCheckpoint()
-        Scoped.releaseAfterUse(ngv)
         val nv = ngv.groupBy(col("v")).agg(sum(col("n_gv")).as("n_v"))
         val ng = ngv.groupBy(col("nation"), col("segment"))
           .agg(sum(col("n_gv")).as("n_g"))

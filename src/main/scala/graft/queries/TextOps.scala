@@ -492,7 +492,6 @@ object TextOps {
         val bg = grams13(bench)
           .select(col("doc_id").as("bench_id"), col("gram"))
           .localCheckpoint() // feeds the sizes agg and the probe join
-        Scoped.releaseAfterUse(bg)
         val sizes = bg.groupBy(col("bench_id")).agg(count(lit(1)).as("n_bench"))
         grams13(docs)
           .join(broadcast(bg), Seq("gram"))
@@ -611,7 +610,6 @@ object TextOps {
         // tokenize pass over the documents scan
         val model = toks.groupBy(col("term")).agg(count(lit(1)).as("cnt"))
           .localCheckpoint()
-        Scoped.releaseAfterUse(model)
         val total = model.agg(sum(col("cnt")).as("n_total"))
         val lp = model.crossJoin(broadcast(total))
           .select(col("term"),
@@ -847,7 +845,6 @@ object TextOps {
           .agg(min(col("cnt")).as("cm_est"))
           .select(col("tok"), col("n_exact"), col("cm_est"))
           .orderBy(desc("n_exact"), asc("tok"))
-        Scoped.releaseAfterUse(tf)
         out
       },
       Some("""WITH toks AS (SELECT
@@ -1094,13 +1091,12 @@ object TextOps {
         // one tokenize pass: the narrow (doc_id, lang, n_tok) projection
         // feeds BOTH the rate plan and the apply — materialized once
         // (at 100 TB this is the token-count column a pipeline persists
-        // anyway), released on the gate's terminal action
+        // anyway)
         val d = t(s, dir, "documents")
           .select(col("doc_id"), col("lang"),
             size(expr("regexp_extract_all(lower(text), '[a-z]+', 0)"))
               .cast("long").as("n_tok"))
           .localCheckpoint()
-        Scoped.releaseAfterUse(d)
         val rates = d.groupBy(col("lang"))
           .agg(sum(col("n_tok")).as("n_tokens"))
           .withColumn("rate",
@@ -1212,7 +1208,6 @@ object TextOps {
           .groupBy(col("doc_id"), col("lang"), col("b"))
           .agg(count(lit(1)).as("c"))
           .localCheckpoint()
-        Scoped.releaseAfterUse(db)
         val raw = db.groupBy(col("b")).agg(sum(col("c")).as("cr"))
         val tgt = db.filter(col("lang") === "en")
           .groupBy(col("b")).agg(sum(col("c")).as("ct"))
@@ -1282,7 +1277,6 @@ object TextOps {
           .groupBy(col("doc_id"), col("lang"), col("bg"))
           .agg(count(lit(1)).as("c"))
           .localCheckpoint()
-        Scoped.releaseAfterUse(db)
         val lp = bigramLmModel(db)
         db.join(lp, Seq("bg"))
           .groupBy(col("doc_id"), col("lang"))
@@ -1472,7 +1466,6 @@ object TextOps {
           expr("regexp_extract_all(lower(text), '[a-z]+', 0)"), "term")
         val model = toks.groupBy(col("term")).agg(count(lit(1)).as("cnt"))
           .localCheckpoint()
-        Scoped.releaseAfterUse(model)
         val total = model.agg(sum(col("cnt")).as("n_total"))
         val lp = model.crossJoin(broadcast(total))
           .select(col("term"),
@@ -1488,9 +1481,6 @@ object TextOps {
             floor(-col("slp").cast("double") / col("n_tok") + 0.5)
               .cast("long").as("nll4"))
           .localCheckpoint() // feeds the threshold AND the verdict join
-        // the two checkpoints above serve multiple actions in one gate
-        // run; arm their release now so the terminal write frees them
-        Scoped.releaseAfterUse(segs, nll)
         val thr = nll.agg(
           floor(sum(col("nll4")).cast("double") / count(lit(1)) + 0.5)
             .cast("long").as("thr4"))
@@ -1785,7 +1775,6 @@ object TextOps {
           .withColumn("h", hash32(concat(lit("rcp:"), col("doc_id").cast("string"))))
           .withColumn("shard", col("h") % 32)
           .localCheckpoint() // one tokenize pass feeds cumsum, totals, output
-        Scoped.releaseAfterUse(d)
         val w1 = Window.partitionBy(col("lang"), col("shard"))
           .orderBy(col("h"), col("doc_id"))
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -1859,7 +1848,6 @@ object TextOps {
         val classes = terms.groupBy(col("c")).agg(count(lit(1)).as("n_terms"))
           .withColumn("toks", col("c") * col("n_terms"))
           .localCheckpoint() // tiny; consumed by both sides of the suffix join
-        Scoped.releaseAfterUse(classes)
         val suffix = classes.as("a")
           .join(classes.as("b"), col("b.c") >= col("a.c"))
           .groupBy(col("a.c").as("c"), col("a.n_terms").as("n_terms"),
@@ -2073,7 +2061,6 @@ object TextOps {
           .agg(count(lit(1)).as("n"))
           .localCheckpoint() // feeds totals, the per-source cum, the pooled
                              // histogram AND the kept-share pass
-        Scoped.releaseAfterUse(hist)
         val tot = hist.groupBy(col("source")).agg(sum(col("n")).as("nt"))
         val wsrc = Window.partitionBy(col("source")).orderBy(col("score4"))
         val cum = hist.withColumn("cum", sum(col("n")).over(wsrc))
@@ -2273,7 +2260,6 @@ object TextOps {
         val out = merges.reduce(_ unionByName _)
           .select(col("round"), col("s1"), col("s2"), col("n"))
           .orderBy(col("round"))
-        Scoped.releaseAfterUse(merges: _*)
         out
       },
       Some(
@@ -2299,7 +2285,6 @@ object TextOps {
         val (tops, finalSeq) = bpeTrain(s, dir, rounds = 3)
         // merge values are already baked into finalSeq's fold rounds
         tops.foreach(Scoped.free(_))
-        Scoped.releaseAfterUse(finalSeq)
         val typeCounts = finalSeq
           .select(col("tok"), size(col("syms")).cast("long").as("n_syms"))
         val dt = explodeLean(t(s, dir, "documents"), Seq(col("lang")),
@@ -2355,11 +2340,6 @@ object TextOps {
           .localCheckpoint()
         val counts = parted.groupBy(col("pid")).agg(count(lit(1)).as("cnt"))
           .collect().map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
-        // armed only AFTER the driver-side counts pull: releaseAfterUse
-        // fires on the next completed action, and the bounded collect
-        // above IS an action — arming first frees the checkpoint under
-        // the real consumer (CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND)
-        Scoped.releaseAfterUse(parted)
         var acc = 0L
         val offs = counts.map { case (pid, c) => val o = (pid, acc); acc += c; o }
         val w = Window.partitionBy(col("pid")).orderBy(col("h"), col("doc_id"))
@@ -2405,7 +2385,6 @@ object TextOps {
         val toks = explodeLean(t(s, dir, "documents"), Seq(col("doc_id")),
           expr("regexp_extract_all(lower(text), '[a-z]+', 0)"), "tok")
           .localCheckpoint()
-        Scoped.releaseAfterUse(toks)
         val ts = toks.agg(max(col("doc_id")).as("m"))
           .select(explode(expr("sequence(1, 10)")).as("k"), col("m"))
           .select(col("k").cast("long").as("k"),
@@ -2424,7 +2403,6 @@ object TextOps {
             coalesce(col("n_tokens"), lit(0L)).as("n_tokens"),
             coalesce(col("vocab"), lit(0L)).as("vocab"))
           .localCheckpoint()
-        Scoped.releaseAfterUse(curve)
         val fit = curve
           .filter(col("vocab") > 0L && col("n_tokens") > 0L)
           .select(
@@ -2514,7 +2492,6 @@ object TextOps {
           .groupBy(col("tok")).agg(count(lit(1)).as("f"))
         val top = tf.orderBy(desc("f"), asc("tok")).limit(100)
           .localCheckpoint()
-        Scoped.releaseAfterUse(top)
         val ranked = top.as("a")
           .join(top.as("b"),
             col("b.f") > col("a.f") ||
@@ -2762,10 +2739,6 @@ object TextOps {
         val ns = st.groupBy(col("source"))
           .agg(sum(col("c")).as("n"), count(lit(1)).as("n_types"))
         val totN = ns.agg(sum(col("n"))).head().getLong(0)
-        // armed AFTER the totN pull — that pull is itself an action and
-        // would otherwise fire the release while the main query still
-        // reads st (the Verify-concurrency hazard class)
-        Scoped.releaseAfterUse(st)
         val kl = st.join(ct, Seq("tok"))
           .select(col("source"),
             (col("c") * floor((log(col("c").cast("double"))
@@ -2835,7 +2808,6 @@ object TextOps {
             expr("array_distinct(gram_hash60(ws, 3))").as("arr"))
         val sg = grams.select(col("source"), explode(col("arr")).as("g"))
           .distinct().localCheckpoint()
-        Scoped.releaseAfterUse(sg)
         val totals = sg.groupBy(col("source"))
           .agg(count(lit(1)).as("n_grams"))
         val novel = sg.groupBy(col("g"))
@@ -2894,7 +2866,6 @@ object TextOps {
             expr("array_distinct(gram_hash60(ws, 3))").as("arr"))
           .select(col("source"), explode(col("arr")).as("g"))
           .distinct().localCheckpoint()
-        Scoped.releaseAfterUse(sg)
         val totals = sg.groupBy(col("source")).agg(count(lit(1)).as("n"))
         val common = sg.groupBy(col("g"))
           .agg(sort_array(collect_set(col("source"))).as("ss"))
@@ -3330,7 +3301,6 @@ object TextOps {
           .groupBy(col("is_dup"), col("pass"))
           .agg(count(lit(1)).as("n_docs"))
           .localCheckpoint()
-        Scoped.releaseAfterUse(g)
         // share over the ≤4-row contingency via a broadcast 1-row total
         // (never an unpartitioned window — the PlanSpec whitelist)
         g.crossJoin(broadcast(g.agg(sum(col("n_docs")).as("tot"))))
@@ -3392,7 +3362,6 @@ object TextOps {
           .localCheckpoint() // two consumers: the total pull + the select
         val total = card.filter(col("source").isNull)
           .select(col("n_tokens")).head().getLong(0)
-        Scoped.releaseAfterUse(card) // armed AFTER the pull (q191 lesson)
         card.select(coalesce(col("source"), lit("ALL")).as("source"),
           col("n_docs"), col("n_tokens"),
           expr(s"n_tokens * 10000 div ${total}L").as("share4"),
@@ -3774,7 +3743,6 @@ object TextOps {
         val out = pr.orderBy(col("pr").desc, col("word")).limit(20)
           .select(col("word"), floor(col("pr") * 1e6 + 0.5).cast("long").as("pr6"))
           .orderBy(col("word"))
-        Scoped.releaseAfterUse(edges, wdeg, verts, prev)
         out
       },
       Some("""WITH RECURSIVE tok AS (
@@ -3845,7 +3813,6 @@ object TextOps {
           expr("regexp_extract_all(lower(text), '[a-z]+', 0)"), "tok")
         val st = toks.groupBy(col("source"), col("tok"))
           .agg(count(lit(1)).as("c")).localCheckpoint()
-        Scoped.releaseAfterUse(st)
         val ns = st.groupBy(col("source")).agg(sum(col("c")).as("n"))
         val ln2g = floor(log(lit(2.0)) * 1e6 + 0.5).cast("long")
         val sh = st.as("a")
@@ -3950,7 +3917,6 @@ object TextOps {
               lit("en")).otherwise(lit("other")))
         val conf = preds.groupBy(col("lang"), col("pred_lang"))
           .agg(count(lit(1)).as("n")).localCheckpoint()
-        Scoped.releaseAfterUse(conf)
         val m = conf.agg(
           sum(when(col("lang") === "en" && col("pred_lang") === "en",
             col("n")).otherwise(0L)).as("tp"),
@@ -4027,7 +3993,6 @@ object TextOps {
           expr("regexp_extract_all(lower(text), '[a-z]+', 0)"), "tok")
         val st = toks.groupBy(col("source"), col("tok"))
           .agg(count(lit(1)).as("c")).localCheckpoint()
-        Scoped.releaseAfterUse(st)
         val ns = st.groupBy(col("source"))
           .agg(sum(col("c")).as("n"), count(lit(1)).as("v_types"),
             count(when(col("c") === 1L, 1)).as("n1"))
@@ -4448,10 +4413,6 @@ object TextOps {
       .orderBy(col("qi")).collect()
       .map(r => (r.getLong(0), r.getLong(1)))
     val cuts = quartileCutoffs(hist)
-    // armed only NOW, after the hist collect, so the stale-event cutoff
-    // filters the collect's own listener event and the checkpoint
-    // survives until the caller's single gate action
-    Scoped.releaseAfterUse(scored)
     val wb = Window.partitionBy(col("bucket")).orderBy(col("h"), col("doc_id"))
     scored
       .withColumn("bucket",

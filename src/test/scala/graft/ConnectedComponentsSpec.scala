@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 import graft.graph.ConnectedComponents
 
 /** Min-label propagation must converge to component = min vertex id on
@@ -9,10 +8,6 @@ import graft.graph.ConnectedComponents
   * (multi-round propagation), multiple components, and the empty graph —
   * without leaking per-round checkpoints. */
 class ConnectedComponentsSpec extends SparkSpec {
-
-  private def liveBlocks(): Int =
-    spark.sparkContext.getPersistentRDDs.values
-      .count(_.getStorageLevel != StorageLevel.NONE)
 
   private def assignMap(pairs: Seq[(Long, Long)]): Map[Long, Long] = {
     import spark.implicits._
@@ -65,10 +60,9 @@ class ConnectedComponentsSpec extends SparkSpec {
   test("no storage blocks leak across an assignment") {
     val baseline = liveBlocks()
     assignMap((100L to 120L).map(v => (v, v + 1)))
-    // all intermediates freed synchronously; only async listener-driven
-    // releases would need awaiting, and assign uses none internally.
-    // <= not ==: a prior suite's abandoned entry (shared session) can
-    // release in the background between baseline and here
+    // all intermediates freed synchronously, so no GC wait is needed.
+    // <= not ==: the ContextCleaner can reclaim a prior suite's
+    // unreachable checkpoints (shared session) between baseline and here
     assert(liveBlocks() <= baseline)
   }
 }

@@ -1,17 +1,12 @@
 package graft
 
-import org.apache.spark.storage.StorageLevel
 import graft.graph.Triangles
 
 /** Degree-ordered triangle counting must be exact on known shapes, robust
   * to messy input (duplicates, reversed orientation, self-loops), agree
   * with a brute-force enumeration on a random graph, and leak no storage
-  * (its edge-set checkpoints are released after the consuming action). */
+  * (its edge-set checkpoints are reclaimed once the result is unreachable). */
 class TrianglesSpec extends SparkSpec {
-
-  private def liveBlocks(): Int =
-    spark.sparkContext.getPersistentRDDs.values
-      .count(_.getStorageLevel != StorageLevel.NONE)
 
   private def countOf(pairs: Seq[(Long, Long)]): (Long, Long, Long) = {
     import spark.implicits._
@@ -69,12 +64,10 @@ class TrianglesSpec extends SparkSpec {
     import spark.implicits._
     val k5 = for (a <- 0L to 4L; b <- (a + 1) to 4L) yield (a, b)
     assert(Triangles.count(k5.toDF("a", "b")).collect()(0).getLong(2) === 10L)
-    val deadline = System.currentTimeMillis() + 20000
-    while (liveBlocks() > baseline && System.currentTimeMillis() < deadline)
-      Thread.sleep(50)
-    // <= not ==: a PRIOR suite's abandoned entry (shared session) can have
-    // its GC-criterion release fire during this wait, legitimately
-    // dropping the count below the baseline captured above
-    assert(liveBlocks() <= baseline, "triangle checkpoints must be released")
+    // the ContextCleaner frees the now-unreachable checkpoints after a GC.
+    // <= not ==: a PRIOR suite's unreachable checkpoints (shared session)
+    // can be reclaimed during this wait too, legitimately dropping the
+    // count below the baseline captured above
+    assert(awaitRelease(baseline) <= baseline, "triangle checkpoints must be released")
   }
 }
